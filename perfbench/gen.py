@@ -2,12 +2,20 @@
 as parquet from NumPy draws on ``--seed``; the oracle reads the same
 files plus the ground-truth coordinates the generator keeps beside them.
 
-Shape of the data (both tables):
+Shape of the data:
   - 1000 Zipf-weighted domains (a few domains own most pages);
-  - 40 city clusters with Zipf-weighted populations: 75% of rows sit in
-    a tight Gaussian around their city (dense, hot cells), 25% are
-    scattered up to +-8 deg lon / +-5 deg lat around it;
+  - project / join_tile: 40 city clusters with Zipf-weighted populations
+    in the fixed order of CITIES: 75% of rows sit in a tight Gaussian
+    around their city (dense, hot cells), 25% are scattered up to
+    +-8 deg lon / +-5 deg lat around it;
+  - resume: the same page mix laid out over 20 UTM zones holding an
+    equal share of the base each; a delta adds pages to two zones;
   - coordinates are 6-decimal values (the page geotag precision).
+
+The seed draws the values, never the volumes: which cities are hot,
+how many rows a zone holds and how many zones a delta touches are the
+same for every seed, so a run's work, and so its times and bytes, do
+not depend on which seed it was given.
 """
 
 from __future__ import annotations
@@ -43,23 +51,42 @@ def _fmt6(v: np.ndarray) -> np.ndarray:
     return np.char.mod("%.6f", v)
 
 
-def geo_rows(rng: np.random.Generator, n: int, cities: np.ndarray | None = None):
-    """(cid, domain, lon, lat) for n rows; lon/lat are the exact doubles
-    of their 6-decimal text (what a geotag parser recovers)."""
-    if cities is None:
-        order = rng.permutation(len(CITIES))
-        cid = order[rng.choice(len(CITIES), n, p=_zipf_weights(len(CITIES), 1.0))]
-    else:
-        cid = rng.choice(cities, n)
+def _rows(rng: np.random.Generator, cid: np.ndarray, lon: np.ndarray, lat: np.ndarray):
+    """(cid, domain, lon, lat, lon text, lat text); lon/lat are the exact
+    doubles of their 6-decimal text (what a geotag parser recovers)."""
+    lon_s, lat_s = _fmt6(lon), _fmt6(lat)
+    dom = rng.choice(N_DOMAINS, len(cid), p=_zipf_weights(N_DOMAINS, 1.1))
+    return cid, dom, lon_s.astype(np.float64), lat_s.astype(np.float64), lon_s, lat_s
+
+
+def geo_rows(rng: np.random.Generator, n: int):
+    """n rows around the Zipf-weighted city clusters."""
+    cid = rng.choice(len(CITIES), n, p=_zipf_weights(len(CITIES), 1.0))
     centre = np.asarray(CITIES, dtype=np.float64)[cid]
     tight = rng.random(n) < 0.75
     dlon = np.where(tight, rng.normal(0.0, 0.25, n), rng.uniform(-8.0, 8.0, n))
     dlat = np.where(tight, rng.normal(0.0, 0.18, n), rng.uniform(-5.0, 5.0, n))
     lon = np.clip(centre[:, 0] + dlon, -179.9, 179.9)
     lat = np.clip(centre[:, 1] + dlat, -70.0, 70.0)
-    lon_s, lat_s = _fmt6(lon), _fmt6(lat)
-    dom = rng.choice(N_DOMAINS, n, p=_zipf_weights(N_DOMAINS, 1.1))
-    return cid, dom, lon_s.astype(np.float64), lat_s.astype(np.float64), lon_s, lat_s
+    return _rows(rng, cid, lon, lat)
+
+
+RESUME_ZONES = np.arange(3, 61, 3)  # 20 UTM zones, 18 deg of longitude apart
+
+
+def zone_rows(rng: np.random.Generator, zones: np.ndarray, per_zone: int, hubs: np.ndarray):
+    """per_zone rows inside each given UTM zone: 75% in a tight Gaussian
+    around the zone's hub latitude, 25% scattered over the zone; every
+    longitude stays inside its zone, so zone row counts are exact."""
+    cid = np.repeat(zones, per_zone)
+    n = len(cid)
+    west = (cid - 1) * 6.0 - 180.0
+    hub = hubs[np.searchsorted(RESUME_ZONES, cid)]
+    tight = rng.random(n) < 0.75
+    lon = west + np.where(tight, np.clip(rng.normal(3.0, 0.25, n), 0.01, 5.99),
+                          rng.uniform(0.01, 5.99, n))
+    lat = hub + np.where(tight, rng.normal(0.0, 0.18, n), rng.uniform(-5.0, 5.0, n))
+    return _rows(rng, cid, lon, lat)
 
 
 def _urls(dom: np.ndarray, tag: str) -> list[str]:
@@ -80,12 +107,13 @@ def write_points(path: str, seed: int, n: int) -> None:
                    os.path.join(path, "centres.parquet"))
 
 
-def _pages_table(rng: np.random.Generator, n: int, tag: str,
-                 cities: np.ndarray | None = None):
-    """pages(url, warc_ts, html, text, lang) and its truth table
-    (url, domain, lon, lat) -- lon/lat null where the page has no tag."""
-    _, dom, lon, lat, lon_s, lat_s = geo_rows(rng, n, cities)
-    kind = rng.random(n)
+def _pages_table(rng: np.random.Generator, rows, tag: str):
+    """pages(url, warc_ts, html, text, lang) for the geo rows ``rows``
+    and its truth table (url, domain, lon, lat) -- lon/lat null where
+    the page has no tag."""
+    _, dom, lon, lat, lon_s, lat_s = rows
+    n = len(dom)
+    kind = (rng.permutation(n) + rng.random(n)) / n  # stratified: exact kind shares
     urls = _urls(dom, tag)
     words = rng.integers(0, 1 << 30, size=(n, 3))
     html, texts = [], []
@@ -137,7 +165,7 @@ def admin_rings(rng: np.random.Generator) -> list[tuple[int, list[tuple[float, f
 def write_pages(path: str, seed: int, n: int) -> None:
     """join_tile input: pages + truth + admin polygons."""
     rng = np.random.default_rng([seed, 2])
-    pages, truth = _pages_table(rng, n, f"j{seed}")
+    pages, truth = _pages_table(rng, geo_rows(rng, n), f"j{seed}")
     pq.write_table(pages, os.path.join(path, "pages.parquet"))
     pq.write_table(truth, os.path.join(path, "truth.parquet"))
     rings = admin_rings(rng)
@@ -148,16 +176,19 @@ def write_pages(path: str, seed: int, n: int) -> None:
 
 
 def write_resume(path: str, seed: int, n: int, n_delta: int, n_deltas: int) -> None:
-    """resume input: a base pages table and a pool of deltas.  Each delta
-    is n_delta new pages around two seeded cities, so it touches only
-    the few UTM-zone partitions those cities' pages fall into."""
+    """resume input: a base pages table spread evenly over RESUME_ZONES
+    and a pool of deltas.  Each delta is n_delta new pages split over
+    two seeded zones, so every delta makes run() rewrite the same volume:
+    two of the twenty zone partitions."""
     rng = np.random.default_rng([seed, 3])
-    base, truth = _pages_table(rng, n, f"r{seed}")
+    hubs = rng.uniform(-45.0, 55.0, len(RESUME_ZONES))
+    rows = zone_rows(rng, RESUME_ZONES, n // len(RESUME_ZONES), hubs)
+    base, truth = _pages_table(rng, rows, f"r{seed}")
     os.makedirs(os.path.join(path, "base"), exist_ok=True)
     pq.write_table(base, os.path.join(path, "base", "part-0.parquet"))
     pq.write_table(truth, os.path.join(path, "truth_base.parquet"))
     for d in range(n_deltas):
-        cities = rng.choice(len(CITIES), 2, replace=False)
-        delta, dtruth = _pages_table(rng, n_delta, f"r{seed}d{d}", cities)
+        zones = np.sort(rng.choice(RESUME_ZONES, 2, replace=False))
+        delta, dtruth = _pages_table(rng, zone_rows(rng, zones, n_delta // 2, hubs), f"r{seed}d{d}")
         pq.write_table(delta, os.path.join(path, f"delta{d}.parquet"))
         pq.write_table(dtruth, os.path.join(path, f"truth_delta{d}.parquet"))

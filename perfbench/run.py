@@ -17,6 +17,7 @@ import argparse
 import json
 import math
 import os
+import shlex
 import statistics
 import sys
 import threading
@@ -27,7 +28,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench_work")
 SETUP_REPEATS = 3
-WARMUP_JOBS = 1
+WARMUP_JOBS = 2
 
 
 def fail(msg: str) -> None:
@@ -47,9 +48,12 @@ def host_settings(trace: bool) -> dict:
     events = os.path.join(WORK, "eventlog")
     for d in (local, tmp, events):
         os.makedirs(d, exist_ok=True)
+    # the heap is committed and touched up front, so the JVM's share of
+    # peak_rss_mb is fixed and does not depend on when G1 grows the heap;
+    # what moves it is Python-worker and off-heap memory
     submit = [
         "--driver-memory", f"{mem_gb}g",
-        "--driver-java-options", f"-Djava.io.tmpdir={tmp}",
+        "--driver-java-options", f"-Djava.io.tmpdir={tmp} -Xms{mem_gb}g -XX:+AlwaysPreTouch",
         "--conf", f"spark.sql.warehouse.dir={os.path.join(WORK, 'warehouse')}",
         "--conf", f"spark.local.dir={local}",
     ]
@@ -63,7 +67,7 @@ def host_settings(trace: bool) -> dict:
         "SPARK_LOCAL_DIRS": local,
         "TMPDIR": tmp,
         "PYSPARK_PYTHON": sys.executable,
-        "PYSPARK_SUBMIT_ARGS": " ".join(submit) + " pyspark-shell",
+        "PYSPARK_SUBMIT_ARGS": shlex.join(submit + ["pyspark-shell"]),
         "OMP_NUM_THREADS": "1",
     }
     os.environ.update(env)
@@ -72,8 +76,10 @@ def host_settings(trace: bool) -> dict:
 
 
 class RssSampler(threading.Thread):
-    """Peak summed RSS of the driver JVM and its descendants (the Python
-    workers), read from /proc every 50 ms."""
+    """Peak summed RSS of the driver JVM and its Python descendants (the
+    workers), read from /proc every 50 ms.  Other descendants are left
+    out: a helper the JVM forks shows the JVM's whole RSS until it execs,
+    which would count the JVM twice."""
 
     def __init__(self, pid: int):
         super().__init__(daemon=True)
@@ -82,19 +88,22 @@ class RssSampler(threading.Thread):
         self._halt = threading.Event()
 
     def _tree_rss(self) -> int:
-        kids: dict[int, list[int]] = {}
+        kids: dict[int, list[tuple[int, str]]] = {}
         for d in os.listdir("/proc"):
             if d.isdigit():
                 try:
                     with open(f"/proc/{d}/stat") as fh:
-                        ppid = int(fh.read().rsplit(")", 1)[1].split()[1])
+                        head, rest = fh.read().rsplit(")", 1)
+                    ppid = int(rest.split()[1])
                 except (OSError, IndexError, ValueError):
                     continue
-                kids.setdefault(ppid, []).append(int(d))
-        total, todo = 0, [self.pid]
+                kids.setdefault(ppid, []).append((int(d), head.split("(", 1)[1]))
+        total, todo = 0, [(self.pid, "java")]
         while todo:
-            p = todo.pop()
+            p, comm = todo.pop()
             todo.extend(kids.get(p, []))
+            if p != self.pid and not comm.startswith("python"):
+                continue
             try:
                 with open(f"/proc/{p}/statm") as fh:
                     total += int(fh.read().split()[1]) * os.sysconf("SC_PAGE_SIZE")
@@ -106,12 +115,18 @@ class RssSampler(threading.Thread):
         while not self._halt.wait(0.05):
             self.peak = max(self.peak, self._tree_rss())
 
-    def reset(self):
-        self.peak = self._tree_rss()
-
     def stop(self):
         self._halt.set()
         self.join(timeout=5)
+
+
+def cpu_ticks() -> tuple[int, int]:
+    """(steal, total) CPU ticks of the host so far, from /proc/stat: the
+    share stolen by the hypervisor over a run tells a slow host apart
+    from a slow program."""
+    with open("/proc/stat") as fh:
+        v = [int(x) for x in fh.readline().split()[1:]]
+    return v[7], sum(v)
 
 
 def clear_persisted(spark) -> None:
@@ -178,7 +193,7 @@ def timed_loop(spark, wl, tr, seconds: float, first: int, local: str,
     while time.perf_counter() < t_end or not times:
         dt, ok, left = run_job(spark, wl, tr, i, check, local, corrupt)
         times.append(dt)
-        stored.append(left / wl.stored_rows())
+        stored.append(left / wl.job_rows())
         failed += not ok
         i += 1
     return times, stored, failed
@@ -227,13 +242,16 @@ def end_to_end(args, wl, settings) -> dict:
     t0 = time.perf_counter()
     spark = start_session()
     session_s = time.perf_counter() - t0
-    warm_s, setups = setup_workload(spark, wl, settings["local"])
+    # peak memory over set-up and the timed jobs: the peak a user of the
+    # process sees, including the checkpoint writes of resume's set-up
     rss = RssSampler(spark.sparkContext._gateway.proc.pid)
     rss.start()
-    rss.reset()
+    warm_s, setups = setup_workload(spark, wl, settings["local"])
     tr = Tracer(spark, False, phase="timed")
+    steal0, total0 = cpu_ticks()
     times, stored, failed = timed_loop(spark, wl, tr, args.seconds, 0, settings["local"],
                                        corrupt=settings["corrupt"])
+    steal1, total1 = cpu_ticks()
     rss.stop()
     stop_session(spark)
     p50 = statistics.median(times)
@@ -249,6 +267,8 @@ def end_to_end(args, wl, settings) -> dict:
         metric("stored_bytes_per_row", statistics.median(stored), "B/row"),
     ])
     info = {"tail_percentile": round(t_pct, 1), "jobs": n, "fail_frac": failed / n,
+            "job_times_s": [round(t, 3) for t in times],
+            "cpu_steal_frac": round((steal1 - steal0) / max(1, total1 - total0), 4),
             "session_start_s": round(session_s, 3), "warmup_s": round(warm_s, 3),
             "workload_setup_runs_s": [round(s, 3) for s in setups], "rows_per_job": wl.job_rows()}
     return {"metrics": m, "attempted": n, "failed": failed, "info": info}
@@ -292,6 +312,8 @@ def main(argv=None) -> int:
                         "driver_mem": settings["driver_mem"], "env": settings["env"]})
     for k, v in res["metrics"].items():
         print(f"{k:28s} {v['value']:.6g} {v['unit']}")
+    # fail_frac is printed but kept out of the result: a result metric may not be 0
+    print(f"{'fail_frac':28s} {res['failed'] / res['attempted']:.6g} frac")
     print("# " + json.dumps(res["info"]))
     ok = res["failed"] == 0 and res["attempted"] >= 1
     print(json.dumps({"correct": ok, "attempted": res["attempted"], "failed": res["failed"],

@@ -45,9 +45,18 @@ def check_metrics(p: subprocess.CompletedProcess, spec: list[dict]) -> dict:
     return res
 
 
+def fail_frac(p: subprocess.CompletedProcess) -> float:
+    """The printed fail_frac line (not part of the JSON result)."""
+    line = next(l.split() for l in p.stdout.splitlines() if l.split()[:1] == ["fail_frac"])
+    assert line[-1] == "frac"
+    return float(line[1])
+
+
 def test_end_to_end_metrics_printed_with_units():
-    res = check_metrics(bench("--seconds", "1", "--trace", "0", "--smoke"), SPEC["end_to_end"])
+    p = bench("--seconds", "1", "--trace", "0", "--smoke")
+    res = check_metrics(p, SPEC["end_to_end"])
     assert res["correct"] and res["failed"] == 0 and res["attempted"] >= 1
+    assert fail_frac(p) == 0.0
 
 
 def test_per_layer_metrics_printed_with_units():
@@ -56,9 +65,11 @@ def test_per_layer_metrics_printed_with_units():
 
 
 def test_corrupted_output_counts_as_failure():
-    res = result(bench("--seconds", "1", "--trace", "0", "--smoke", "--corrupt"))
+    p = bench("--seconds", "1", "--trace", "0", "--smoke", "--corrupt")
+    res = result(p)
     assert not res["correct"]
     assert res["failed"] == res["attempted"] >= 1
+    assert fail_frac(p) == 1.0
 
 
 def test_refuses_to_run_without_the_program(tmp_path):

@@ -75,14 +75,11 @@ def operations_bench(seed: int, n: int) -> dict[str, float]:
 
 
 def _event_lines(path: str):
-    """Lines of a plain event log, or of every file of a rolling one."""
-    if os.path.isdir(path):
-        files = sorted(os.listdir(path), key=lambda f: int(f.split("_")[1]) if f.startswith("events_") else -1)
-        paths = [os.path.join(path, f) for f in files if f.startswith("events_")]
-    else:
-        paths = [path]
-    for p in paths:
-        with open(p) as fh:
+    """Lines of a rolling event log: the directory ``eventlog_v2_<app>``
+    that Spark 4 writes by default, its ``events_<n>_<app>`` files in order."""
+    files = sorted((int(f.split("_")[1]), f) for f in os.listdir(path) if f.startswith("events_"))
+    for _, f in files:
+        with open(os.path.join(path, f)) as fh:
             yield from fh
 
 
@@ -203,16 +200,13 @@ def run(args, name: str, settings: dict, rm) -> dict:
             med = statistics.median(r)
             skew = max(skew, max(r) / med if med > 0 else float(len(r)))
 
+    # bridge = UDF stage time the kernels do not account for
     cpus = settings["cpus"]
-    udf_wl = home("udf")
-    udf_rows = {s.job: s.rows for s in tracers[udf_wl].spans if s.name == "udf.utm"}
+    udf_spans = tracers[home("udf")].spans
     bridge = []
-    for job, rows in udf_rows.items():
-        tot = 0.0
-        for k in (("utm", "datum", "karney") if udf_wl == "project" else ("utm",)):
-            st = [s for s in tracers[udf_wl].spans if s.job == job and s.name == f"udf.{k}"]
-            tot += st[0].end - st[0].start - ops[k] * rows / cpus / 1e9
-        bridge.append(tot)
+    for job, rows in {s.job: s.rows for s in udf_spans if s.name == "udf.utm"}.items():
+        bridge.append(sum(s.end - s.start - ops[s.name[4:]] * rows / cpus / 1e9
+                          for s in udf_spans if s.job == job and s.name.startswith("udf.")))
     plain_p50, traced_p50 = statistics.median(t_plain), statistics.median(t_traced)
     selfs = self_times(tracers[name].spans)
     n_jobs = len(t_traced)
@@ -223,8 +217,8 @@ def run(args, name: str, settings: dict, rm) -> dict:
         "operations.karney_ns_per_pt": (ops["karney"], "ns"),
         "operations.bytes_per_pt": (KERNEL_BYTES_PER_PT, "B"),
         "udf.utm_stage_s": (span_s("udf", "udf.utm"), "s"),
-        "udf.datum_stage_s": (span_s("udf", "udf.datum") if udf_wl == "project" else 0.0, "s"),
-        "udf.karney_stage_s": (span_s("udf", "udf.karney") if udf_wl == "project" else 0.0, "s"),
+        "udf.datum_stage_s": (span_s("udf", "udf.datum"), "s"),
+        "udf.karney_stage_s": (span_s("udf", "udf.karney"), "s"),
         "udf.bridge_s": (statistics.median(bridge), "s"),
         "udf.arrow_batches": (count("udf", "udf.arrow_batches"), "count"),
         "pages.scan_extract_s": (span_s("pages", "pages.scan_extract"), "s"),

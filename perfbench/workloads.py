@@ -22,14 +22,17 @@ from pyspark.sql import functions as F
 import gen
 import oracle
 
-# rows per job at full size, and at --smoke
+# rows per job at full size, and at --smoke.  Full sizes come from
+# measured job time T(n) = fixed + per-row * n on a 4-core host (see
+# README, "Sizing"): project is sized so per-row work (kernels, Arrow
+# bridge, cell encoding) is ~70% of the job; join_tile and resume stay
+# dominated by Spark's per-query cost at any size a run can afford.
 SIZES = {
-    "project": {"full": 120_000, "smoke": 3_000},
-    "join_tile": {"full": 5_000, "smoke": 2_000},
-    "resume": {"full": 10_000, "smoke": 2_000},
+    "project": {"full": 480_000, "smoke": 3_000},
+    "join_tile": {"full": 20_000, "smoke": 2_000},
+    "resume": {"full": 40_000, "smoke": 2_000},
 }
 RESUME_DELTA_FRAC = 0.02
-ARROW_BATCH = 65536  # spark.sql.execution.arrow.maxRecordsPerBatch set by get_spark
 RESUME_DELTAS = 4
 
 
@@ -127,10 +130,6 @@ class Workload:
     def job_rows(self) -> int:
         return self.rows
 
-    def stored_rows(self) -> int:
-        """Rows the last job's on-disk bytes are divided by."""
-        return self.job_rows()
-
 
 class Project(Workload):
     name = "project"
@@ -149,7 +148,9 @@ class Project(Workload):
 
         pts = spark.read.parquet(os.path.join(self.dir, "points.parquet"))
         cen = spark.read.parquet(os.path.join(self.dir, "centres.parquet"))
-        df = pts.join(F.broadcast(cen), "cid")
+        # only the columns the job uses, so a traced layer persists no
+        # more than the untraced plan (which prunes the rest) carries
+        df = pts.join(F.broadcast(cen), "cid").select("lon", "lat", "clon", "clat")
         lon, lat = F.col("lon"), F.col("lat")
         self._traced = df
         df = tr.layer("udf.utm", df.withColumn("_u", utm_fwd_udf()(lon, lat)))
@@ -172,8 +173,10 @@ class Project(Workload):
     def trace_counts(self, tr: Tracer) -> None:
         # Arrow batches the three UDF stages cut: per input partition,
         # ceil(rows / maxRecordsPerBatch) each (computed, not counted)
+        spark = self._traced.sparkSession
+        batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
         per_part = self._traced.groupBy(F.spark_partition_id()).count().toPandas()["count"]
-        tr.count("udf.arrow_batches", 3 * int(sum(-(-c // ARROW_BATCH) for c in per_part)))
+        tr.count("udf.arrow_batches", 3 * int(sum(-(-c // batch) for c in per_part)))
 
 
 def geotagged_points(spark: SparkSession, paths: list[str]) -> DataFrame:
@@ -273,7 +276,7 @@ class Resume(Workload):
 
     def __init__(self, work, seed, smoke):
         super().__init__(work, seed, smoke)
-        self.n_delta = max(1, int(self.rows * RESUME_DELTA_FRAC))
+        self.n_delta = max(2, int(self.rows * RESUME_DELTA_FRAC)) // 2 * 2  # split over two zones
         self.ckpt = os.path.join(self.dir, "ckpt")
         self.snapshot = os.path.join(self.dir, "ckpt_setup")
 
@@ -289,12 +292,6 @@ class Resume(Workload):
 
     def job_rows(self):
         return self.rows + self.n_delta
-
-    def stored_rows(self):
-        # rows the job rewrote: which zones a seeded delta hits, and so how
-        # much of the base it rewrites, varies by seed; bytes per rewritten
-        # row does not, and still grows with lineage or write amplification
-        return max(1, self._run[1]["rows_written"]) if hasattr(self, "_run") else self.job_rows()
 
     def staged(self, spark: SparkSession, paths: list[str], tr: Tracer | None = None) -> DataFrame:
         """pages -> geotags -> auto-zoned UTM -> z12 cell: the checkpointed stage's input."""
