@@ -29,11 +29,15 @@ expression API.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StructField, StructType
+
+from proj_spark.spark.udf import run_morsels
 
 # per-worker caches: definition string -> compiled object.  Workers are
 # long-lived processes; pipelines are small (no grids until used), so
@@ -69,9 +73,13 @@ def _geodesic(ellps: str):
     return g
 
 
-def _by_group(key: pd.Series, cols: list[pd.Series], n_out: int, fn):
-    """Apply fn(key_value, *chunks) -> n_out arrays, grouped by the
-    distinct values of `key` (usually a single literal).
+def _by_group(key: pd.Series, cols: list[pd.Series], n_out: int, resolve, kernel):
+    """Apply kernel(resolve(key_value), *chunks) -> n_out arrays, grouped
+    by the distinct values of `key` (usually a single literal).
+
+    resolve() returns the group's compiled object, filling the per-worker
+    caches, before run_morsels splits the group's rows: the caches are
+    never touched from a morsel thread.
 
     SQL null semantics: rows with a null key yield null (NaN -> Spark
     NULL) outputs instead of failing the task; null numeric inputs are
@@ -83,7 +91,7 @@ def _by_group(key: pd.Series, cols: list[pd.Series], n_out: int, fn):
     valid = ~pd.isna(kv)
     for k in pd.unique(kv[valid]):
         m = (kv == k) & valid
-        rs = fn(str(k), *(v[m] for v in vals))
+        rs = run_morsels(partial(kernel, resolve(str(k))), *(v[m] for v in vals))
         for o, r in zip(outs, rs):
             o[m] = r
     return outs
@@ -100,14 +108,14 @@ _DIR = StructType([StructField("lat2", DoubleType()), StructField("lon2", Double
 
 
 def _proj_fwd_fn(defn: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-    x, y = _by_group(defn, [lon, lat], 2,
-                     lambda d, lo, la: _pipeline(d).fwd_deg(lo, la))
+    x, y = _by_group(defn, [lon, lat], 2, _pipeline,
+                     lambda op, lo, la: op.fwd_deg(lo, la))
     return pd.DataFrame({"x": x, "y": y})
 
 
 def _proj_inv_fn(defn: pd.Series, x: pd.Series, y: pd.Series) -> pd.DataFrame:
-    lon, lat = _by_group(defn, [x, y], 2,
-                         lambda d, xv, yv: _pipeline(d).inv_deg(xv, yv))
+    lon, lat = _by_group(defn, [x, y], 2, _pipeline,
+                         lambda op, xv, yv: op.inv_deg(xv, yv))
     return pd.DataFrame({"lon": lon, "lat": lat})
 
 
@@ -117,9 +125,7 @@ def _crs_transform_fn(src: pd.Series, dst: pd.Series, x: pd.Series,
     # string dtype propagates a null src OR dst into a null key
     key = src.astype("string") + "\x1f" + dst.astype("string")
 
-    def run(k, xv, yv):
-        s, d = k.split("\x1f")
-        t = _transform(s, d)
+    def run(t, xv, yv):
         if t.src.is_geographic:
             xv, yv = np.radians(xv), np.radians(yv)
         ox, oy, _ = t.fwd3d(xv, yv, np.zeros_like(xv))
@@ -127,29 +133,29 @@ def _crs_transform_fn(src: pd.Series, dst: pd.Series, x: pd.Series,
             ox, oy = np.degrees(ox), np.degrees(oy)
         return ox, oy
 
-    ox, oy = _by_group(key, [x, y], 2, run)
+    ox, oy = _by_group(key, [x, y], 2, lambda k: _transform(*k.split("\x1f")), run)
     return pd.DataFrame({"x": ox, "y": oy})
 
 
 def _geod_inverse_fn(ellps: pd.Series, lat1: pd.Series, lon1: pd.Series,
                      lat2: pd.Series, lon2: pd.Series) -> pd.DataFrame:
-    def run(k, la1, lo1, la2, lo2):
-        s, a1, a2 = _geodesic(k).inverse(
+    def run(g, la1, lo1, la2, lo2):
+        s, a1, a2 = g.inverse(
             np.radians(la1), np.radians(lo1), np.radians(la2), np.radians(lo2))
         return s, np.degrees(a1), np.degrees(a2)
 
-    s12, az1, az2 = _by_group(ellps, [lat1, lon1, lat2, lon2], 3, run)
+    s12, az1, az2 = _by_group(ellps, [lat1, lon1, lat2, lon2], 3, _geodesic, run)
     return pd.DataFrame({"s12": s12, "azi1": az1, "azi2": az2})
 
 
 def _geod_direct_fn(ellps: pd.Series, lat1: pd.Series, lon1: pd.Series,
                     azi1: pd.Series, s12: pd.Series) -> pd.DataFrame:
-    def run(k, la1, lo1, az1, sv):
-        a, b, c = _geodesic(k).direct(
+    def run(g, la1, lo1, az1, sv):
+        a, b, c = g.direct(
             np.radians(la1), np.radians(lo1), np.radians(az1), sv)
         return np.degrees(a), np.degrees(b), np.degrees(c)
 
-    la2, lo2, az2 = _by_group(ellps, [lat1, lon1, azi1, s12], 3, run)
+    la2, lo2, az2 = _by_group(ellps, [lat1, lon1, azi1, s12], 3, _geodesic, run)
     return pd.DataFrame({"lat2": la2, "lon2": lo2, "azi2": az2})
 
 

@@ -2,19 +2,40 @@
 
 One compiled Operation (plan-time constants only: floats + small ndarrays)
 is closed over by a scalar pandas UDF; Spark serializes the closure to
-executors once per task. Each Arrow batch (~64k rows) is transformed by a
-single NumPy call — no per-row Python, mirroring the columnar contract of
-the reference's proj_trans_generic (src/4D_api.cpp:353-460).
+executors once per task.  No per-row Python: each Arrow batch (up to
+65,536 rows) reaches its kernel as float64 arrays, mirroring the columnar
+contract of the reference's proj_trans_generic (src/4D_api.cpp:353-460).
+
+Every kernel UDF is built by `kernel_udf`, which hands the batch to
+`run_morsels`: the batch is cut into contiguous row ranges ("morsels") of
+at least MORSEL_ROWS rows, run on a per-worker thread pool sized to the
+CPUs the worker may use (NumPy releases the GIL inside ufunc loops), and
+the results are concatenated in row order.  The kernels are
+row-independent, so outputs are bit-identical to one call on the whole
+batch.  This matters when one task holds most of the rows (a single
+Parquet row group, a skewed partition): its kernels still use every core.
+
+The morsel floor exists because a kernel call has a cost no row count
+amortizes (a Karney inverse costs ~2 ms even on 10
+rows) and every NumPy call hands the GIL over; below ~20k rows a
+morsel loses more to that than its thread gains, so a 64k batch splits
+into 3 morsels and a batch under 40k rows runs as one call.  The batch
+size stays at 65,536 (session.py): larger batches let Karney use a fourth
+thread but raised the benchmark's peak memory by 20-28%.
 """
 
 from __future__ import annotations
+
+import os
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import DataType, DoubleType, IntegerType, StructField, StructType
 
 XY_SCHEMA = StructType([
     StructField("x", DoubleType()),
@@ -32,57 +53,95 @@ LONLAT_SCHEMA = StructType([
     StructField("lat", DoubleType()),
 ])
 
+# Smallest morsel, in rows (see the module docstring).  Measured on a
+# 4-core x86 VM over one 64k batch: 3 morsels sped Karney up 1.9-2.2x, 4
+# only 1.8-1.9x, and 8 ran slower than one call (227 vs 193 ms); UTM and
+# the datum chain gain up to 2.5x and 3.7x.
+MORSEL_ROWS = 20_000
+
+# per-worker-process thread pool: (pid, executor, threads)
+_POOL: tuple[int, ThreadPoolExecutor | None, int] | None = None
+
+
+def _worker_pool() -> tuple[ThreadPoolExecutor | None, int]:
+    """The calling process's morsel pool and its thread count (the CPUs
+    this process may run on).  The calling thread runs one morsel itself,
+    so the pool holds one thread fewer.  Keyed by pid: PySpark forks its
+    Python workers from a daemon, and a pool does not survive a fork."""
+    global _POOL
+    pid = os.getpid()
+    if _POOL is None or _POOL[0] != pid:
+        if hasattr(os, "sched_getaffinity"):
+            threads = len(os.sched_getaffinity(0))
+        else:   # no affinity API (macOS)
+            threads = os.cpu_count() or 1
+        pool = (ThreadPoolExecutor(threads - 1, thread_name_prefix="morsel")
+                if threads > 1 else None)
+        _POOL = (pid, pool, threads)
+    return _POOL[1], _POOL[2]
+
+
+def run_morsels(kernel, *cols: np.ndarray) -> tuple[np.ndarray, ...]:
+    """kernel(*cols) -> tuple of row-aligned arrays, run over contiguous
+    row ranges of `cols` on the worker's threads and concatenated in row
+    order.
+
+    `kernel` must be row-independent (row i of every output depends only
+    on row i of the inputs) and must not fill caches: resolve compiled
+    operations before calling.  Batches under two morsels run as one
+    call on the calling thread."""
+    n = len(cols[0])
+    pool, threads = _worker_pool()
+    k = min(threads, n // MORSEL_ROWS)
+    if k < 2:
+        return tuple(kernel(*cols))
+    cuts = [n * i // k for i in range(k + 1)]
+    futs = [pool.submit(kernel, *(c[lo:hi] for c in cols))
+            for lo, hi in zip(cuts[1:-1], cuts[2:])]
+    parts = [kernel(*(c[:cuts[1]] for c in cols))]
+    parts += [f.result() for f in futs]
+    return tuple(np.concatenate(p) for p in zip(*parts))
+
+
+def kernel_udf(returns: DataType, kernel, setup=None) -> "pandas_udf":
+    """Scalar pandas UDF: each batch's columns go to `kernel` as float64
+    arrays through run_morsels.  `kernel` returns one array per field of
+    a StructType `returns` (or a 1-tuple for a plain type).
+
+    `setup`, if given, runs once per batch in the worker before the batch
+    is split, and its result is passed to every morsel as the kernel's
+    first argument: per-worker caches are filled there, never in a morsel
+    thread."""
+
+    def _f(*cols):  # pd.Series each; no hints, so SCALAR by default
+        fn = kernel if setup is None else partial(kernel, setup())
+        outs = run_morsels(fn, *(c.to_numpy(dtype=np.float64) for c in cols))
+        if isinstance(returns, StructType):
+            return pd.DataFrame(dict(zip(returns.fieldNames(), outs)))
+        return pd.Series(outs[0])
+
+    return pandas_udf(_f, returns)
+
 
 def fwd_udf(op) -> "pandas_udf":
     """(lon_deg, lat_deg) -> struct(x, y) meters, via op.fwd_deg."""
-
-    @pandas_udf(XY_SCHEMA)
-    def _f(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        x, y = op.fwd_deg(lon.to_numpy(dtype=np.float64), lat.to_numpy(dtype=np.float64))
-        return pd.DataFrame({"x": x, "y": y})
-
-    return _f
+    return kernel_udf(XY_SCHEMA, op.fwd_deg)
 
 
 def inv_udf(op) -> "pandas_udf":
     """(x, y) meters -> struct(lon, lat) degrees, via op.inv_deg."""
-
-    @pandas_udf(LONLAT_SCHEMA)
-    def _f(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-        lon, lat = op.inv_deg(x.to_numpy(dtype=np.float64), y.to_numpy(dtype=np.float64))
-        return pd.DataFrame({"lon": lon, "lat": lat})
-
-    return _f
+    return kernel_udf(LONLAT_SCHEMA, op.inv_deg)
 
 
 def cart_fwd_udf(op) -> "pandas_udf":
     """(lon_deg, lat_deg, h) -> struct(x, y, z) geocentric meters."""
-
-    @pandas_udf(XYZ_SCHEMA)
-    def _f(lon: pd.Series, lat: pd.Series, h: pd.Series) -> pd.DataFrame:
-        x, y, z = op.fwd3d(
-            np.radians(lon.to_numpy(dtype=np.float64)),
-            np.radians(lat.to_numpy(dtype=np.float64)),
-            h.to_numpy(dtype=np.float64),
-        )
-        return pd.DataFrame({"x": x, "y": y, "z": z})
-
-    return _f
+    return kernel_udf(
+        XYZ_SCHEMA, lambda lon, lat, h: op.fwd3d(np.radians(lon), np.radians(lat), h))
 
 
 def helmert_udf(h) -> "pandas_udf":
     """(x, y, z) -> struct(x, y, z) via a Helmert transform (epoch-free)."""
-
-    @pandas_udf(XYZ_SCHEMA)
-    def _f(x: pd.Series, y: pd.Series, z: pd.Series) -> pd.DataFrame:
-        ox, oy, oz = h.fwd(
-            x.to_numpy(dtype=np.float64),
-            y.to_numpy(dtype=np.float64),
-            z.to_numpy(dtype=np.float64),
-        )
-        return pd.DataFrame({"x": ox, "y": oy, "z": oz})
-
-    return _f
+    return kernel_udf(XYZ_SCHEMA, h.fwd)
 
 
 def project(df: DataFrame, projstring: str, lon_col: str = "lon", lat_col: str = "lat",
@@ -110,46 +169,60 @@ def project(df: DataFrame, projstring: str, lon_col: str = "lon", lat_col: str =
                .drop(tmp))
 
 
+UTM_SCHEMA = StructType([
+    StructField("zone", IntegerType()),
+    StructField("x", DoubleType()),
+    StructField("y", DoubleType()),
+])
+
+
 def utm_fwd_udf(ellps: str = "GRS80", south: bool = False) -> "pandas_udf":
     """(lon_deg, lat_deg) -> struct(zone int, x, y): auto-zoned UTM.
 
-    One UDF handles every zone: per Arrow batch, rows are grouped by zone
-    (np.unique — at most 60 groups) and each group runs the exact etmerc
-    kernel for its zone.  This keeps the whole-table projection a single
-    map-side pass — no per-zone filtering, no repartition — which is the
-    shape that scales: zone mix within a batch costs one extra indexed
-    gather, while 60 filtered passes would scan the table 60 times.
+    One UDF handles every zone: UTMBatch projects a batch that mixes
+    zones in one kernel call with a per-row central meridian.  This keeps
+    the whole-table projection a single map-side pass — no per-zone
+    filtering, no repartition — which is the shape that scales: 60
+    filtered passes would scan the table 60 times.
     Zone logic mirrors src/projections/tmerc.cpp:541-589.
     """
-    from pyspark.sql.types import IntegerType
-
-    schema = StructType([
-        StructField("zone", IntegerType()),
-        StructField("x", DoubleType()),
-        StructField("y", DoubleType()),
-    ])
-    suffix = " +south" if south else ""
-
-    @pandas_udf(schema)
-    def _f(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        from proj_spark.operations.tmerc import UTMBatch
-
-        key = (ellps, south)
-        op = _UTM_OP_CACHE.get(key)
-        if op is None:
-            params = {"ellps": ellps}
-            if south:
-                params["south"] = True
-            op = _UTM_OP_CACHE[key] = UTMBatch(params)
-        zone, x, y = op.fwd_deg(lon.to_numpy(dtype=np.float64),
-                                lat.to_numpy(dtype=np.float64))
-        return pd.DataFrame({"zone": zone.astype(np.int32), "x": x, "y": y})
-
-    return _f
+    return kernel_udf(UTM_SCHEMA, _utm_kernel, setup=lambda: _utm_op(ellps, south))
 
 
 # per-executor-worker UTM kernel cache (setup amortized across batches)
 _UTM_OP_CACHE: dict = {}
+
+
+def _utm_op(ellps: str, south: bool):
+    key = (ellps, south)
+    op = _UTM_OP_CACHE.get(key)
+    if op is None:
+        from proj_spark.operations.tmerc import UTMBatch
+        params = {"ellps": ellps}
+        if south:
+            params["south"] = True
+        op = _UTM_OP_CACHE[key] = UTMBatch(params)
+    return op
+
+
+def _utm_kernel(op, lon, lat):
+    zone, x, y = op.fwd_deg(lon, lat)
+    return zone.astype(np.int32), x, y
+
+
+# per-executor-worker Geodesic cache, keyed by (a, f)
+_GEODESIC_CACHE: dict = {}
+
+
+def worker_geodesic(a: float, f: float):
+    """The worker process's Geodesic for (a, f), built on first use: its
+    series coefficients cost more to build than a small batch's
+    kernel."""
+    g = _GEODESIC_CACHE.get((a, f))
+    if g is None:
+        from proj_spark.operations.karney import Geodesic
+        g = _GEODESIC_CACHE[(a, f)] = Geodesic(a, f)
+    return g
 
 
 def webmerc_x(lon: Column, a: float = 6378137.0) -> Column:
@@ -163,16 +236,11 @@ def webmerc_y(lat: Column, a: float = 6378137.0) -> Column:
 def cart_inv_udf(op) -> "pandas_udf":
     """(X, Y, Z) geocentric meters -> struct(lon, lat) degrees (Bowring)."""
 
-    @pandas_udf(LONLAT_SCHEMA)
-    def _f(x: pd.Series, y: pd.Series, z: pd.Series) -> pd.DataFrame:
-        lam, phi, _ = op.inv3d(
-            x.to_numpy(dtype=np.float64),
-            y.to_numpy(dtype=np.float64),
-            z.to_numpy(dtype=np.float64),
-        )
-        return pd.DataFrame({"lon": np.degrees(lam), "lat": np.degrees(phi)})
+    def kernel(x, y, z):
+        lam, phi, _ = op.inv3d(x, y, z)
+        return np.degrees(lam), np.degrees(phi)
 
-    return _f
+    return kernel_udf(LONLAT_SCHEMA, kernel)
 
 
 def datum_pipeline_udf(cart, helmert) -> "pandas_udf":
@@ -184,16 +252,14 @@ def datum_pipeline_udf(cart, helmert) -> "pandas_udf":
     JVM->Python transfer for the whole chain instead of three.
     """
 
-    @pandas_udf(LONLAT_SCHEMA)
-    def _f(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        lam = np.radians(lon.to_numpy(dtype=np.float64))
-        phi = np.radians(lat.to_numpy(dtype=np.float64))
+    def kernel(lon, lat):
+        lam, phi = np.radians(lon), np.radians(lat)
         x, y, z = cart.fwd3d(lam, phi, np.zeros_like(lam))
         x, y, z = helmert.fwd(x, y, z)
         lam2, phi2, _ = cart.inv3d(x, y, z)
-        return pd.DataFrame({"lon": np.degrees(lam2), "lat": np.degrees(phi2)})
+        return np.degrees(lam2), np.degrees(phi2)
 
-    return _f
+    return kernel_udf(LONLAT_SCHEMA, kernel)
 
 
 def factors_udf(op) -> "pandas_udf":
@@ -211,15 +277,11 @@ def factors_udf(op) -> "pandas_udf":
         StructField("s", DoubleType()),
     ])
 
-    @pandas_udf(schema)
-    def _f(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        fac = factors(op,
-                      np.radians(lon.to_numpy(dtype=np.float64)),
-                      np.radians(lat.to_numpy(dtype=np.float64)))
-        return pd.DataFrame({"h": fac["h"], "k": fac["k"],
-                             "conv": fac["conv"], "s": fac["s"]})
+    def kernel(lon, lat):
+        fac = factors(op, np.radians(lon), np.radians(lat))
+        return fac["h"], fac["k"], fac["conv"], fac["s"]
 
-    return _f
+    return kernel_udf(schema, kernel)
 
 
 def geod_inverse_udf(a: float, f: float) -> "pandas_udf":
@@ -237,21 +299,16 @@ def geod_inverse_udf(a: float, f: float) -> "pandas_udf":
     ])
     g = Geodesic(a, f)
 
-    @pandas_udf(schema)
-    def _f(lat1: pd.Series, lon1: pd.Series,
-           lat2: pd.Series, lon2: pd.Series) -> pd.DataFrame:
-        s12, azi1, azi2 = g.inverse(
-            np.radians(lat1.to_numpy(dtype=np.float64)),
-            np.radians(lon1.to_numpy(dtype=np.float64)),
-            np.radians(lat2.to_numpy(dtype=np.float64)),
-            np.radians(lon2.to_numpy(dtype=np.float64)))
+    def kernel(lat1, lon1, lat2, lon2):
+        s12, azi1, azi2 = g.inverse(np.radians(lat1), np.radians(lon1),
+                                    np.radians(lat2), np.radians(lon2))
         a1 = np.degrees(azi1)
         a2 = np.degrees(azi2)
         a1 = np.where(a1 < 0.0, a1 + 360.0, a1 + 0.0)
         a2 = np.where(a2 < 0.0, a2 + 360.0, a2 + 0.0)
-        return pd.DataFrame({"s12": s12, "azi1": a1, "azi2": a2})
+        return s12, a1, a2
 
-    return _f
+    return kernel_udf(schema, kernel)
 
 
 def geod_edge_area_udf(a: float, f: float) -> "pandas_udf":
@@ -270,18 +327,13 @@ def geod_edge_area_udf(a: float, f: float) -> "pandas_udf":
     ])
     g = Geodesic(a, f)
 
-    @pandas_udf(schema)
-    def _f(lat1: pd.Series, lon1: pd.Series,
-           lat2: pd.Series, lon2: pd.Series) -> pd.DataFrame:
-        s12, _, _, area = g.inverse(
-            np.radians(lat1.to_numpy(dtype=np.float64)),
-            np.radians(lon1.to_numpy(dtype=np.float64)),
-            np.radians(lat2.to_numpy(dtype=np.float64)),
-            np.radians(lon2.to_numpy(dtype=np.float64)),
-            want_area=True)
-        return pd.DataFrame({"s12": s12, "area12": area})
+    def kernel(lat1, lon1, lat2, lon2):
+        s12, _, _, area = g.inverse(np.radians(lat1), np.radians(lon1),
+                                    np.radians(lat2), np.radians(lon2),
+                                    want_area=True)
+        return s12, area
 
-    return _f
+    return kernel_udf(schema, kernel)
 
 
 def crs_transform_udf(src: str, dst: str, area: tuple | None = None):
@@ -298,23 +350,17 @@ def crs_transform_udf(src: str, dst: str, area: tuple | None = None):
     from proj_spark.planner import crs_to_crs
 
     t = crs_to_crs(src, dst, area)
-    schema = StructType([StructField("x", DoubleType()),
-                         StructField("y", DoubleType()),
-                         StructField("z", DoubleType())])
 
-    def _f(x, y, z=None):
-        xv = x.to_numpy(np.float64)
-        yv = y.to_numpy(np.float64)
-        zv = (np.zeros_like(xv) if z is None
-              else np.nan_to_num(z.to_numpy(np.float64)))
+    def kernel(xv, yv, zv=None):
+        zv = np.zeros_like(xv) if zv is None else np.nan_to_num(zv)
         if t.src.is_geographic:
             xv, yv = np.radians(xv), np.radians(yv)
         ox, oy, oz = t.fwd3d(xv, yv, zv)
         if t.dst.is_geographic:
             ox, oy = np.degrees(ox), np.degrees(oy)
-        return pd.DataFrame({"x": ox, "y": oy, "z": oz})
+        return ox, oy, oz
 
-    return pandas_udf(_f, schema)
+    return kernel_udf(XYZ_SCHEMA, kernel)
 
 
 def transform_crs(df: DataFrame, src: str, dst: str,

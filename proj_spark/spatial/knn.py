@@ -49,16 +49,17 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 from pyspark.sql.window import Window
 
+from proj_spark.operations.geodesic import vincenty_inverse
+from proj_spark.spark.udf import kernel_udf, worker_geodesic
 from proj_spark.spatial import cells
 
 EARTH_R = 6371008.8  # IUGG mean radius
+WGS84_A, WGS84_F = 6378137.0, 1 / 298.257223563
 
 
 def haversine_expr(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
@@ -81,27 +82,23 @@ def haversine_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
     )
 
 
-@pandas_udf(DoubleType())
-def vincenty_dist_udf(lon1: pd.Series, lat1: pd.Series,
-                      lon2: pd.Series, lat2: pd.Series) -> pd.Series:
-    from proj_spark.operations.geodesic import vincenty_inverse
-    s12, _, _ = vincenty_inverse(
-        np.radians(lon1.to_numpy(np.float64)), np.radians(lat1.to_numpy(np.float64)),
-        np.radians(lon2.to_numpy(np.float64)), np.radians(lat2.to_numpy(np.float64)))
-    return pd.Series(s12)
+def _vincenty_dist(lon1, lat1, lon2, lat2):
+    return vincenty_inverse(np.radians(lon1), np.radians(lat1),
+                            np.radians(lon2), np.radians(lat2))[:1]
 
 
-@pandas_udf(DoubleType())
-def karney_dist_udf(lon1: pd.Series, lat1: pd.Series,
-                    lon2: pd.Series, lat2: pd.Series) -> pd.Series:
-    """Round-off-exact WGS84 ellipsoidal distance (Karney order-6 series;
-    reference src/geodesic.c geod_inverse)."""
-    from proj_spark.operations.karney import Geodesic
-    g = Geodesic(6378137.0, 1 / 298.257223563)
-    s12, _, _ = g.inverse(
-        np.radians(lat1.to_numpy(np.float64)), np.radians(lon1.to_numpy(np.float64)),
-        np.radians(lat2.to_numpy(np.float64)), np.radians(lon2.to_numpy(np.float64)))
-    return pd.Series(s12)
+def _karney_dist(g, lon1, lat1, lon2, lat2):
+    return g.inverse(np.radians(lat1), np.radians(lon1),
+                     np.radians(lat2), np.radians(lon2))[:1]
+
+
+vincenty_dist_udf = kernel_udf(DoubleType(), _vincenty_dist)
+
+# Round-off-exact WGS84 ellipsoidal distance (Karney order-6 series;
+# reference src/geodesic.c geod_inverse); the Geodesic is built once per
+# worker process.
+karney_dist_udf = kernel_udf(DoubleType(), _karney_dist,
+                             setup=lambda: worker_geodesic(WGS84_A, WGS84_F))
 
 
 def _tile_x(lon: float, z: int) -> int:

@@ -229,8 +229,8 @@ def polygon_area_udf(ellps_a: float = 6378137.0,
 
     @pandas_udf(DoubleType())
     def _f(ring: pd.Series) -> pd.Series:
-        from proj_spark.operations.karney import Geodesic
-        g = Geodesic(ellps_a, 1.0 / rf)
+        from proj_spark.spark.udf import worker_geodesic
+        g = worker_geodesic(ellps_a, 1.0 / rf)
         out = np.empty(len(ring))
         for i, r in enumerate(ring):
             lons = np.radians(np.array([v["lon"] for v in r]))

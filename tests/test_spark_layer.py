@@ -602,3 +602,174 @@ def test_knn_self_join_matches_bruteforce(spark, geo):
         assert len(mine) == len(exp), (urls[i], len(mine), len(exp))
         for (ed, eid), (gid, gd) in zip(exp, mine):
             assert eid == gid and abs(ed - gd) < 2e-3, (urls[i], eid, gid)
+
+
+# -- morsel-parallel kernel UDFs ---------------------------------------------
+
+MORSEL_N = 70_001   # > one 65,536-row Arrow batch: the first batch splits
+
+
+@pytest.fixture(scope="module")
+def morsel_df(spark):
+    """One partition of MORSEL_N rows with null and NaN lon/lat rows.  The
+    full 65,536-row first Arrow batch is cut into morsels; the rest is one
+    small batch."""
+    import pandas as pd
+    rng = np.random.default_rng(7)
+    flag = rng.choice(4, MORSEL_N, p=[0.94, 0.02, 0.02, 0.02])
+    pdf = pd.DataFrame({
+        "i": np.arange(MORSEL_N),
+        "lon": rng.uniform(-180.0, 180.0, MORSEL_N),
+        "lat": rng.uniform(-84.0, 84.0, MORSEL_N),
+        "dlon": rng.normal(0.0, 2.0, MORSEL_N),
+        "dlat": rng.normal(0.0, 2.0, MORSEL_N),
+        "flag": flag,
+    })
+    # flag 1: lon null, 2: lat NaN, 3: lon NaN and lat null
+    nan = F.lit(float("nan"))
+    df = spark.createDataFrame(pdf).select(
+        "i",
+        F.when(F.col("flag") == 1, F.lit(None)).when(F.col("flag") == 3, nan)
+        .otherwise(F.col("lon")).cast("double").alias("lon"),
+        F.when(F.col("flag") == 2, nan).when(F.col("flag") == 3, F.lit(None))
+        .otherwise(F.col("lat")).cast("double").alias("lat"),
+        "dlon", "dlat").coalesce(1).cache()
+    assert df.rdd.getNumPartitions() == 1 and df.count() == MORSEL_N
+    yield df
+    df.unpersist()
+
+
+def _morsel_inputs(pdf):
+    """The float64 views the kernels see: null and NaN both become NaN."""
+    lon = pdf["lon"].to_numpy(np.float64)
+    lat = pdf["lat"].to_numpy(np.float64)
+    return lon, lat, lon + pdf["dlon"].to_numpy(), lat + pdf["dlat"].to_numpy()
+
+
+def _assert_udf_output(got, names, expected):
+    """Spark output == the direct kernel call: bit-identical values with
+    signbit; a NaN kernel output reaches Spark as null, never as NaN."""
+    for name, exp in zip(names, expected):
+        exp = np.asarray(exp)
+        is_null = got[f"{name}_null"].to_numpy(bool)
+        assert not got[f"{name}_nan"].any(), name
+        if exp.dtype.kind == "f":
+            assert np.array_equal(is_null, np.isnan(exp)), name
+        else:
+            assert not is_null.any(), name
+        v = got[name].to_numpy(np.float64)[~is_null]
+        e = exp[~is_null].astype(np.float64)
+        assert np.array_equal(v, e), name
+        assert np.array_equal(np.signbit(v), np.signbit(e)), name
+
+
+def _collect_fields(df, col, names):
+    cols = [F.col("i")]
+    for n in names:
+        c = F.col(f"{col}.{n}") if col else F.col(n)
+        cols += [c.cast("double").alias(n), c.isNull().alias(f"{n}_null"),
+                 F.isnan(c.cast("double")).alias(f"{n}_nan")]
+    return df.select(*cols).toPandas().sort_values("i").reset_index(drop=True)
+
+
+def test_utm_udf_morsels_match_kernel(spark, morsel_df):
+    from proj_spark.operations.tmerc import UTMBatch
+    from proj_spark.spark.udf import utm_fwd_udf
+    got = _collect_fields(morsel_df.withColumn(
+        "_u", utm_fwd_udf()(F.col("lon"), F.col("lat"))), "_u", ["zone", "x", "y"])
+    lon, lat, _, _ = _morsel_inputs(morsel_df.orderBy("i").toPandas())
+    zone, x, y = UTMBatch({"ellps": "GRS80"}).fwd_deg(lon, lat)
+    _assert_udf_output(got, ["zone", "x", "y"], [zone.astype(np.int32), x, y])
+
+
+def test_datum_udf_morsels_match_kernel(spark, morsel_df):
+    from proj_spark import create
+    from proj_spark.spark.udf import datum_pipeline_udf
+    cart = create("+proj=cart +ellps=GRS80")
+    hel = create("+proj=helmert +x=-81.07 +y=-89.36 +z=-115.75 +rx=0.485 "
+                 "+ry=0.024 +rz=0.413 +s=-0.54 +convention=position_vector")
+    got = _collect_fields(morsel_df.withColumn(
+        "_g", datum_pipeline_udf(cart, hel)(F.col("lon"), F.col("lat"))),
+        "_g", ["lon", "lat"])
+    lon, lat, _, _ = _morsel_inputs(morsel_df.orderBy("i").toPandas())
+    x, y, z = cart.fwd3d(np.radians(lon), np.radians(lat), np.zeros_like(lon))
+    lam, phi, _ = cart.inv3d(*hel.fwd(x, y, z))
+    _assert_udf_output(got, ["lon", "lat"], [np.degrees(lam), np.degrees(phi)])
+
+
+def test_karney_udf_morsels_match_kernel(spark, morsel_df):
+    from proj_spark.operations.karney import Geodesic
+    from proj_spark.spatial.knn import karney_dist_udf
+    df = morsel_df.withColumn("lon2", F.col("lon") + F.col("dlon")) \
+                  .withColumn("lat2", F.col("lat") + F.col("dlat"))
+    got = _collect_fields(df.withColumn("d", karney_dist_udf(
+        F.col("lon"), F.col("lat"), F.col("lon2"), F.col("lat2"))), None, ["d"])
+    lon, lat, lon2, lat2 = _morsel_inputs(morsel_df.orderBy("i").toPandas())
+    s12, _, _ = Geodesic(6378137.0, 1 / 298.257223563).inverse(
+        np.radians(lat), np.radians(lon), np.radians(lat2), np.radians(lon2))
+    _assert_udf_output(got, ["d"], [s12])
+
+
+def test_run_morsels_floor(monkeypatch):
+    """A batch under two morsels is one kernel call; at two morsels it is
+    cut into contiguous ranges, concatenated back in row order."""
+    import os
+    from concurrent.futures import ThreadPoolExecutor
+    from proj_spark.spark import udf as kudf
+    pool = ThreadPoolExecutor(3)   # as on a worker that may use 4 CPUs
+    monkeypatch.setattr(kudf, "_POOL", (os.getpid(), pool, 4))
+    calls = []
+
+    def kernel(a, b):
+        calls.append((a[0], len(a)))
+        return a * 2.0, -b
+
+    m = kudf.MORSEL_ROWS
+    a = np.arange(2 * m - 1, dtype=np.float64)
+    out = kudf.run_morsels(kernel, a, a)
+    assert calls == [(0.0, 2 * m - 1)]
+    assert np.array_equal(out[0], a * 2.0) and np.array_equal(out[1], -a)
+
+    calls.clear()
+    a = np.arange(2 * m, dtype=np.float64)
+    out = kudf.run_morsels(kernel, a, a)
+    assert sorted(calls) == [(0.0, m), (float(m), m)]
+    assert np.array_equal(out[0], a * 2.0)
+    assert np.array_equal(np.signbit(out[1]), np.signbit(-a))
+
+    calls.clear()
+    a = np.arange(10 * m, dtype=np.float64)
+    kudf.run_morsels(kernel, a, a)
+    assert len(calls) == 4    # never more morsels than usable CPUs
+    pool.shutdown()
+
+
+def test_run_morsels_concurrent_callers():
+    """Callers on several threads share the worker's pool; each gets its
+    own rows back, in order, under frequent interpreter switches."""
+    import sys
+    import threading
+    from proj_spark.spark.udf import MORSEL_ROWS, run_morsels
+    n = 3 * MORSEL_ROWS + 7
+    results, errors = {}, []
+
+    def caller(i):
+        try:
+            a = np.arange(n, dtype=np.float64) + i * n
+            (out,) = run_morsels(lambda v: (v * 2.0,), a)
+            results[i] = np.array_equal(out, a * 2.0)
+        except Exception as exc:  # reported below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=caller, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert not errors and results == {i: True for i in range(8)}

@@ -21,7 +21,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # The probe models an N-core EXECUTOR: a small fixed heap to match the
 # pinned CPU budget (the engine's 24g local-suite default is sized for
